@@ -1,16 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftshim.GraftShim
 
 /** Registration + Column API for graft's native expressions.
   *
-  * Production wiring: build the session with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * and `SELECT graft_cosine(a, b)` / `graft_dot(a, b)` work in SQL.
-  * [[GraftFunctions.registerTo]] does the same on an existing session.
+  * [[graft.core.SparkSessionFactory]] calls [[GraftFunctions.registerTo]]
+  * on every session it builds, so `SELECT graft_cosine(a, b)` /
+  * `graft_dot(a, b)` work in SQL.
   */
 object GraftFunctions {
 
@@ -23,9 +22,6 @@ object GraftFunctions {
         (e: Seq[Expression]) => CosineSimilarity(e(0), e(1))),
       (FunctionIdentifier("graft_dot"), info("graft_dot", classOf[DotProductF]),
         (e: Seq[Expression]) => DotProductF(e(0), e(1))))
-
-  def register(ext: SparkSessionExtensions): Unit =
-    functions.foreach(ext.injectFunction)
 
   def registerTo(spark: SparkSession): Unit =
     functions.foreach { case (id, inf, builder) =>
@@ -43,15 +39,4 @@ object GraftFunctions {
 
   /** Codegen'd dot product over two array<float> columns. */
   def dot(a: Column, b: Column): Column = expr2(DotProductF.apply)(a, b)
-}
-
-/** `spark.sql.extensions` entry point: SQL functions + the top-k-per-key
-  * planner strategy and its window-rank rewrite rule. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.register(ext)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.RankLimitToTopK)
-  }
 }

@@ -131,9 +131,10 @@ object Medallion {
     * history AND the hot buckets of untouched keys — carries across the
     * commit by manifest reference. Per-batch silver cost is
     * O(batch + touched buckets' current rows): the month-only layout
-    * still rewrote the ENTIRE hot partition (O(current)) per batch,
-    * which IncBench measured as silver_ratio ≈ 1.0 — the last
-    * O(current)-per-batch writer in the pipeline. */
+    * still rewrote the ENTIRE hot partition (O(current)) per batch
+    * (measured: an incremental batch staged ≈ the whole silver table;
+    * perfbench's `pipeline.runner.batch.fs_bytes_written` tracks it) —
+    * the last O(current)-per-batch writer in the pipeline. */
   def silverScd2(spark: SparkSession, paths: Paths, conf: SilverConf,
                  now: Timestamp): Long = {
     val job = s"silver_${conf.entity}"
@@ -352,7 +353,7 @@ object Medallion {
     * bystanders even though the merge semantically replaces the key's
     * whole history: a new version only changes the hot partition and the
     * month its closed-out predecessor archives into, so only those are
-    * staged (IncBench: with 100-month histories the conservative
+    * staged (measured: with 100-month histories the conservative
     * touched-months rule restaged the whole table; the content diff
     * keeps the commit at O(current + batch)). Every other month rides
     * the manifest — zero bytes restaged; a batch that changes nothing

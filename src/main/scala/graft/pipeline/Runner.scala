@@ -206,12 +206,8 @@ object Runner {
     // skip when this fact version is already audited (no-op batches leave
     // the version unchanged — re-diffing and re-appending would add a
     // duplicate record per idle batch). The tagged-file probe is ONE
-    // file-exists call — no log scan per batch; the content fallback
-    // only pays for versions recorded before tagged appends existed.
-    val recorded = graft.tx.AppendLog.tagged(spark, auditRoot, s"v$factV") ||
-      (graft.tx.AppendLog.exists(spark, auditRoot) &&
-        !graft.tx.AppendLog.read(spark, auditRoot)
-          .filter(col("fact_version") === factV).isEmpty)
+    // file-exists call — no log scan per batch.
+    val recorded = graft.tx.AppendLog.tagged(spark, auditRoot, s"v$factV")
     if (factV > 0 && !recorded) {
       val changes = graft.tx.AtomicRewrite.diff(spark, factRoot, factV - 1, factV)
         .groupBy(col("_change_type")).agg(count(lit(1)).as("n"))
@@ -261,17 +257,5 @@ object Runner {
           .filter(col("method") =!= "1-urgent")))
     graft.domain.MobilityDomain.factPayments(spark, paths, now)
     graft.tx.AtomicRewrite.read(spark, paths.gold("fact_payments"))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, root) = args.take(2)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val agg = runAll(spark, sfDir, root)
-    println(s"agg_orders_daily rows=${agg.count()}")
-    spark.stop()
   }
 }

@@ -33,8 +33,8 @@ import org.apache.spark.sql.graftshim.GraftShim
   */
 object AsOfJoinNative {
 
-  /** Install the planner strategy (idempotent; also wired into
-    * [[graft.functions.GraftExtensions]] and the session factory). */
+  /** Install the planner strategy (idempotent; wired into the session
+    * factory). */
   def install(spark: SparkSession): Unit =
     GraftShim.installPlanner(spark, AsOfStrategy, Nil)
 

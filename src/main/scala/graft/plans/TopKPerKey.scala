@@ -48,8 +48,8 @@ object TopKPerKey {
   val RewriteMaxK = 100000
 
   /** Install the planner strategy + rewrite rule on a live session
-    * (idempotent). Config-based twin: `spark.sql.extensions` →
-    * [[graft.functions.GraftExtensions]]. */
+    * (idempotent; [[graft.core.SparkSessionFactory]] calls it on every
+    * session it builds). */
   def install(spark: SparkSession): Unit =
     GraftShim.installPlanner(spark, TopKStrategy, Seq(RankLimitToTopK))
 

@@ -216,9 +216,7 @@ object TextQueries {
       // see [[graft.ops.Graph.connectedComponents]] for the scale shape
       // (per-round work is O(frontier ⋈ edges), not O(all docs)).
       val labels = graft.ops.Graph.connectedComponents(
-        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
-        // stderr: Bench/Verify stdout is machine-parsed by the driver
-        trace = m => System.err.println(s"q48 $m"))
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
       sh.unpersist()
       // re-attach the isolated docs, then release every persisted frame
       // (unpersisting derived projections would be a silent no-op)

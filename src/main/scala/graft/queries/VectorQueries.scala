@@ -46,8 +46,8 @@ object VectorQueries {
   /** Trained K=⌈√N⌉ centroid set shared by the whole inline cell family
     * ([[graft.pipeline.AnnIndexStore.trainCentroids]]: deterministic
     * salted-hash seed, [[TrainIters]] Lloyd rounds, exact-decimal
-    * means) — the [[graft.tools.AnnScaleProbe]]-pinned production
-    * policy. √N balances BOTH costs a cell family pays: assignment is
+    * means) — the production policy BASELINE.md's IVF scaling rows
+    * pin. √N balances BOTH costs a cell family pays: assignment is
     * N·K = N^1.5 cosines and the within-cell pair blocks total
     * ~N²/K = N^1.5 — no parameter choice leaves a designed quadratic.
     * (The corpus-derived every-50th subset this replaces made
@@ -72,9 +72,9 @@ object VectorQueries {
   /** Lloyd rounds of the cell family's centroid training. */
   val TrainIters = 2
 
-  /** Fixed query-panel size for the q128 recall eval (the AnnScaleProbe
-    * protocol): the smallest [[EvalPanel]] ids matching the `% 50`
-    * predicate, so eval cost stays ~flat as the corpus grows. */
+  /** Fixed query-panel size for the q128 recall eval (the IVF scaling
+    * protocol in BASELINE.md): the smallest [[EvalPanel]] ids matching
+    * the `% 50` predicate, so eval cost stays ~flat as the corpus grows. */
   val EvalPanel = 40
 
   /** Nearest-centroid assignment — argmax as a NARROW MAP (the
@@ -340,7 +340,7 @@ object VectorQueries {
     // harness pointed at the index a deployment would actually serve
     // from, so the recall/nprobe trade-off of the persisted store is a
     // measured, oracle-pinned number instead of a hope. The query set
-    // is a FIXED [[EvalPanel]]-query sample (the AnnScaleProbe
+    // is a FIXED [[EvalPanel]]-query sample (BASELINE.md's IVF scaling
     // protocol: the smallest matching ids, factor-independent), NOT the
     // corpus-growing `% 50` sweep the production queries serve — an
     // eval's cost must stay ~flat as the corpus grows, because its

@@ -15,17 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Growth bound: one file per append — erasure runs / fact versions,
   * an operational cadence, not data volume. A `tag`ged append is
   * idempotent (deterministic file name, overwrite-rename), which also
-  * gives writers an O(1) "already appended?" probe via [[tagged]].
-  *
-  * A log that STARTED as a versioned snapshot (pre-append layout) is
-  * folded in once on first append, crash-safely: the legacy rows are
-  * staged to a dot-dir (invisible to plain scans), renamed up under
-  * DETERMINISTIC names (overwrite semantics — a retry re-stages the
-  * same bytes over the same names, never duplicating), and the version
-  * machinery is deleted LAST. Readers are correct in every intermediate
-  * state: while `_LATEST`/`v=*` survive, [[read]] resolves the
-  * versioned layout and ignores the flat files; once they are gone the
-  * folded files ARE the log. */
+  * gives writers an O(1) "already appended?" probe via [[tagged]]. */
 object AppendLog {
 
   /** Default [[append]] fold threshold: when the log exceeds this many
@@ -44,7 +34,6 @@ object AppendLog {
              tag: Option[String] = None,
              foldThreshold: Int = FoldThreshold): Unit = {
     tag.foreach(t => require(t.matches("[A-Za-z0-9._-]+"), s"unsafe append tag: $t"))
-    migrateLegacy(spark, root)
     completeFold(spark, root)
     if (partFiles(spark, root).length > foldThreshold)
       // a replayed TAGGED append must stay an overwrite: its existing
@@ -79,7 +68,6 @@ object AppendLog {
                   rows: Seq[org.apache.spark.sql.Row],
                   schema: org.apache.spark.sql.types.StructType,
                   foldThreshold: Int = FoldThreshold): Unit = {
-    migrateLegacy(spark, root)
     completeFold(spark, root)
     if (partFiles(spark, root).length > foldThreshold)
       fold(spark, root)
@@ -249,63 +237,13 @@ object AppendLog {
     f.delete(staged, true)
   }
 
-  /** One-time crash-safe fold of a pre-append-layout log (versioned
-    * snapshot under `v=<N>/` + `_LATEST`) into the flat append files.
-    * Ordering: stage → rename-up (deterministic `legacy_*` names,
-    * overwrite) → delete the `_LATEST` pointer → delete version dirs
-    * OLDEST-FIRST. A crash anywhere leaves a state from which both
-    * [[read]] and a retry are correct: while any committed `v=` dir
-    * survives, the versioned branch of [[read]] still resolves — with
-    * the pointer via `_LATEST`, without it via AtomicRewrite's
-    * `_COMMITTED` fallback (and a retry re-stages from the NEWEST
-    * surviving snapshot — oldest-first deletion keeps that the true
-    * newest); once the last dir is gone, `exists()` is false and the
-    * already-folded `legacy_*` files are the source of truth. */
-  private def migrateLegacy(spark: SparkSession, logRoot: String): Unit = {
-    if (!AtomicRewrite.exists(spark, logRoot)) return
-    val root = new Path(logRoot)
-    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val alreadyFolded = f.exists(root) && f.listStatus(root).exists { s =>
-      val n = s.getPath.getName
-      n.startsWith("legacy") && n.endsWith(".parquet")
-    }
-    val legacyRows =
-      try Some(AtomicRewrite.read(spark, logRoot))
-      catch {
-        // a prior attempt deleted every version dir but crashed before
-        // the pointer: the folded files already hold the rows
-        case _: IllegalStateException if alreadyFolded => None
-      }
-    legacyRows.foreach(rows =>
-      stageAndRename(spark, logRoot, rows, i => s"legacy${suffix(i)}"))
-    // pointer FIRST: while any v= dir survives, AtomicRewrite's
-    // _COMMITTED fallback keeps the versioned branch of [[read]]
-    // resolving without it; once the dirs are gone, exists() is false
-    // and the folded legacy_* files are read. (Dirs-then-pointer would
-    // leave a crash state — all dirs gone, pointer present — where
-    // every read throws until the next append retries the migration.)
-    f.listStatus(root).filter { s =>
-      val n = s.getPath.getName
-      n == "_LATEST" || n.startsWith("._LATEST")
-    }.foreach(s => f.delete(s.getPath, false))
-    f.listStatus(root).filter(_.getPath.getName.startsWith("v="))
-      .sortBy(_.getPath.getName.stripPrefix("v=").toLong)
-      .foreach(s => f.delete(s.getPath, true))
-  }
+  /** Whether any rows have ever been appended. */
+  def exists(spark: SparkSession, root: String): Boolean =
+    partFiles(spark, root).nonEmpty
 
-  /** Whether any rows have ever been appended (legacy layout counts). */
-  def exists(spark: SparkSession, root: String): Boolean = {
-    val p = new Path(root)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.exists(p) &&
-      (AtomicRewrite.exists(spark, root) ||
-        f.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-  }
-
-  /** Read the full log (a pre-migration legacy layout is still
-    * readable, and a mid-fold state never double-counts: sources listed
-    * in the fold marker are excluded only once their folded target
-    * exists).
+  /** Read the full log (a mid-fold state never double-counts: sources
+    * listed in the fold marker are excluded only once their folded
+    * target exists).
     *
     * The file set is resolved CONSISTENTLY against a concurrent fold:
     * the (marker bytes, directory listing) pair is snapshotted twice and
@@ -318,43 +256,41 @@ object AppendLog {
     * still hit missing files at task time; the engine runs reads and
     * appends of one log from a single process, where [[append]] and
     * [[read]] never interleave mid-job. */
-  def read(spark: SparkSession, root: String): DataFrame =
-    if (AtomicRewrite.exists(spark, root)) AtomicRewrite.read(spark, root)
-    else {
-      val p = new Path(root)
-      val f = fs(spark, p)
-      val marker = new Path(root, FoldMarker)
-      def snapshot(): (Option[String], Seq[String]) = {
-        val m = if (f.exists(marker)) Some(readText(f, marker)) else None
-        (m, partFiles(spark, root))
-      }
-      var state = snapshot()
-      var settled = false
-      var attempts = 0
-      while (!settled) {
-        val again = snapshot()
-        if (again == state) settled = true
-        else {
-          state = again
-          attempts += 1
-          if (attempts > 50) throw new IllegalStateException(
-            s"append-log $root kept changing across 50 listing attempts")
-        }
-      }
-      val (markerBytes, files) = state
-      val lines = markerBytes.toSeq
-        .flatMap(_.split("\n").toSeq).filter(_.nonEmpty)
-      // an empty/absent marker means no fold is mid-flight: every
-      // listed file is live
-      val selected =
-        if (lines.isEmpty) files
-        else {
-          val (target, sources) = (lines.head, lines.tail.toSet)
-          if (files.contains(target)) files.filterNot(sources) else files
-        }
-      // mergeSchema: the log's files may carry evolved schemas
-      val reader = spark.read.option("mergeSchema", "true")
-      if (selected.isEmpty) reader.parquet(root) // surface the usual empty-dir error
-      else reader.parquet(selected.map(n => s"$root/$n"): _*)
+  def read(spark: SparkSession, root: String): DataFrame = {
+    val p = new Path(root)
+    val f = fs(spark, p)
+    val marker = new Path(root, FoldMarker)
+    def snapshot(): (Option[String], Seq[String]) = {
+      val m = if (f.exists(marker)) Some(readText(f, marker)) else None
+      (m, partFiles(spark, root))
     }
+    var state = snapshot()
+    var settled = false
+    var attempts = 0
+    while (!settled) {
+      val again = snapshot()
+      if (again == state) settled = true
+      else {
+        state = again
+        attempts += 1
+        if (attempts > 50) throw new IllegalStateException(
+          s"append-log $root kept changing across 50 listing attempts")
+      }
+    }
+    val (markerBytes, files) = state
+    val lines = markerBytes.toSeq
+      .flatMap(_.split("\n").toSeq).filter(_.nonEmpty)
+    // an empty/absent marker means no fold is mid-flight: every
+    // listed file is live
+    val selected =
+      if (lines.isEmpty) files
+      else {
+        val (target, sources) = (lines.head, lines.tail.toSet)
+        if (files.contains(target)) files.filterNot(sources) else files
+      }
+    // mergeSchema: the log's files may carry evolved schemas
+    val reader = spark.read.option("mergeSchema", "true")
+    if (selected.isEmpty) reader.parquet(root) // surface the usual empty-dir error
+    else reader.parquet(selected.map(n => s"$root/$n"): _*)
+  }
 }

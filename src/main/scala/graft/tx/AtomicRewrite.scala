@@ -1049,9 +1049,9 @@ object AtomicRewrite {
     * listing + schema-inference job), and an append-style store
     * accretes one owning version per commit — so without this cache a
     * read after commit k re-inferred all k groups (O(versions) driver
-    * jobs per read, measured growing 0.6 s → 1.5 s over 12 commits in
-    * CommitProfile) even though k−1 of them are byte-identical to the
-    * previous read's. A committed version dir is immutable, so the
+    * jobs per read, measured growing 0.6 s → 1.5 s over 12 commits,
+    * OPTIMIZATION_r16.md §4) even though k−1 of them are byte-identical
+    * to the previous read's. A committed version dir is immutable, so the
     * (root, version, dir-set) relation can be reused forever; the
     * commit-marker mtime token guards the delete-and-rebuild hole
     * exactly like [[readCache]]. Access-ordered LRU, capped: entries for

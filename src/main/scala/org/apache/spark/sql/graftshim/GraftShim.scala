@@ -50,8 +50,7 @@ object GraftShim {
     df.queryExecution.analyzed
 
   /** Install extra planner strategies / optimizer rules on a live session
-    * (the `experimental` hook — the non-config twin of
-    * `spark.sql.extensions`). Idempotent per strategy/rule instance. */
+    * (the `experimental` hook). Idempotent per strategy/rule instance. */
   def installPlanner(spark: org.apache.spark.sql.SparkSession,
                      strategy: org.apache.spark.sql.execution.SparkStrategy,
                      rules: Seq[org.apache.spark.sql.catalyst.rules.Rule[

@@ -53,24 +53,6 @@ class GdprAuditSpec extends SparkSpec {
     assert(read.columns.toSeq.sorted == Gdpr.AuditCols.sorted)
   }
 
-  test("legacy versioned audit folds into the append log once") {
-    val root = Files.createTempDirectory("graft-audit-legacy").toString
-    val audit = s"$root/audit"
-    AtomicRewrite.write(spark, s"$root/t", Seq((1L, "alice")).toDF("id", "name"))
-    // seed a pre-append-layout audit (versioned snapshot)
-    AtomicRewrite.write(spark, audit, Seq(
-      ("f" * 64, "e", "t", Seq("name"), ts("2023-12-01 00:00:00")))
-      .toDF(Gdpr.AuditCols: _*).coalesce(1))
-    assert(AtomicRewrite.exists(spark, audit))
-
-    Gdpr.propagate(spark, Seq(1L).toDF("id"), "e", Seq(policy("t")),
-      tb => s"$root/$tb", audit, "s", ts("2024-01-01 00:00:00"))
-    assert(!AtomicRewrite.exists(spark, audit), "legacy layout must be gone")
-    val read = Gdpr.readAudit(spark, audit)
-    assert(read.count() == 2, "legacy rows + new run")
-    assert(read.filter(col("erased_at") === ts("2023-12-01 00:00:00")).count() == 1)
-  }
-
   test("unpartitioned table with no subject rows burns no version, claims no audit") {
     val root = Files.createTempDirectory("graft-audit-miss").toString
     val t = s"$root/t"

@@ -470,7 +470,10 @@ class PartitionedFactSpec extends SparkSpec {
       .collect().toSet == Set((20240101, 1L, 15.0), (20240201, 1L, 20.0)))
   }
 
-  test("runner cadence: fact compacts every 4 versions and re-buckets") {
+  /** A pipeline root driven through five `Runner.runBatch` calls: the
+    * fifth batch crosses the compaction cadence. Built once, shared by
+    * the cadence and the fact-pruning cases. */
+  private lazy val cadenceRoot: String = {
     val root = Files.createTempDirectory("graft-cadence").toString
     def batch(day: Int, oid: Long) = {
       val d = f"2024-01-$day%02d"
@@ -485,6 +488,11 @@ class PartitionedFactSpec extends SparkSpec {
     for (day <- 1 to 5)
       Runner.runBatch(spark, root, customer, batch(day, 100L + day),
         ts(f"2024-01-$day%02d 10:00:00"), s"b$day")
+    root
+  }
+
+  test("runner cadence: fact compacts every 4 versions and re-buckets") {
+    val root = cadenceRoot
     val factRoot = Medallion.Paths(root).gold("fact_orders")
     // 5 batches -> v0..v4; the 5th hit factV=4 and compacted into v5
     assert(AtomicRewrite.currentVersion(spark, factRoot).contains(5L))
@@ -497,6 +505,21 @@ class PartitionedFactSpec extends SparkSpec {
     assert(bucketed.count() == 5)
     assert(AtomicRewrite.read(spark, Medallion.Paths(root).gold("agg_orders_daily"))
       .agg(sum(col("orders_total"))).head().getLong(0) == 5L)
+  }
+
+  test("a month_key filter on the gold fact prunes its scan by partition") {
+    val fact = AtomicRewrite.read(spark, Medallion.Paths(cadenceRoot).gold("fact_orders"))
+    val q = fact.filter(col("month_key") === 202401).select("o_orderkey", "o_totalprice")
+    assert(q.count() == 5)
+    val plan = q.queryExecution.executedPlan.toString
+    val factScans = plan.linesIterator
+      .filter(l => l.contains("FileScan") && l.contains("/fact_orders/")).toSeq
+    assert(factScans.nonEmpty, s"no fact scan in:\n$plan")
+    assert(factScans.forall(l => l.contains("PartitionFilters: [") &&
+      !l.replaceAll("\\s", "").contains("PartitionFilters:[]")),
+      s"a fact scan reads every month:\n${factScans.mkString("\n")}")
+    assert(factScans.forall(_.contains("month_key#")),
+      s"fact scans must prune on month_key:\n${factScans.mkString("\n")}")
   }
 
   test("mid-silver failure records FAIL:<ExcType>, keeps watermark; replay heals") {

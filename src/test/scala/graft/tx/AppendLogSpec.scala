@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Append-only log: tagged idempotent appends, O(1) recorded probe, and
-  * crash-safe legacy fold-in (every intermediate state of the migration
-  * must read correctly and retry safely). */
+  * crash-safe folds (every intermediate state of a fold must read
+  * correctly and retry safely). */
 class AppendLogSpec extends SparkSpec {
   import spark.implicits._
 
@@ -138,84 +138,5 @@ class AppendLogSpec extends SparkSpec {
       tag = Some("v2"))
     val rows = AppendLog.read(spark, root).select("v").as[Long].collect().sorted
     assert(rows.toSeq == Seq(1L, 2L, 3L, 4L, 5L), s"got ${rows.toSeq}")
-  }
-
-  test("migration crash after the pointer delete leaves every reader working") {
-    val root = Files.createTempDirectory("graft-alog-ptr").toString + "/log"
-    AtomicRewrite.write(spark, root,
-      Seq((1L, "old1"), (2L, "old2")).toDF("v", "x").coalesce(1))
-    val f = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate: legacy rows staged+renamed, _LATEST pointer deleted,
-    // crash BEFORE the v= dirs are deleted
-    val staged = new org.apache.hadoop.fs.Path(root, ".stage")
-    AtomicRewrite.read(spark, root).coalesce(1)
-      .write.mode("overwrite").parquet(staged.toString)
-    f.listStatus(staged).filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach(s => f.rename(s.getPath,
-        new org.apache.hadoop.fs.Path(root, "legacy.parquet")))
-    f.delete(staged, true)
-    f.delete(new org.apache.hadoop.fs.Path(root, "_LATEST"), false)
-    // the _COMMITTED fallback keeps the versioned branch resolving —
-    // no exception, no double count
-    assert(AtomicRewrite.exists(spark, root), "committed v= dir must resolve")
-    assert(AppendLog.read(spark, root).count() == 2)
-    // the retry finishes the migration and appends
-    AppendLog.append(spark, root, Seq((3L, "new")).toDF("v", "x"))
-    assert(!AtomicRewrite.exists(spark, root))
-    val out = AppendLog.read(spark, root).select("x").as[String].collect().toSet
-    assert(out == Set("old1", "old2", "new"), s"got $out")
-  }
-
-  test("legacy fold-in: reads stay correct mid-migration; retry never duplicates") {
-    val root = Files.createTempDirectory("graft-alog-mig").toString + "/log"
-    AtomicRewrite.write(spark, root,
-      Seq((1L, "old1"), (2L, "old2")).toDF("v", "x").coalesce(1))
-
-    // simulate the state after stage+rename but BEFORE the version dirs
-    // are deleted (a crash window): folded files AND versioned layout
-    val legacy = AtomicRewrite.read(spark, root)
-    val f = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = new org.apache.hadoop.fs.Path(root, ".stage")
-    legacy.coalesce(1).write.mode("overwrite").parquet(staged.toString)
-    f.listStatus(staged).filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach(s => f.rename(s.getPath,
-        new org.apache.hadoop.fs.Path(root, "legacy.parquet")))
-    f.delete(staged, true)
-    // mid-migration read resolves the versioned layout, ignores the
-    // flat fold — no double counting
-    assert(AppendLog.read(spark, root).count() == 2)
-
-    // retry (the next append) completes the fold and appends
-    AppendLog.append(spark, root, Seq((3L, "new")).toDF("v", "x"))
-    assert(!AtomicRewrite.exists(spark, root), "version machinery must be gone")
-    val out = AppendLog.read(spark, root).select("x").as[String].collect().toSet
-    assert(out == Set("old1", "old2", "new"), s"got $out")
-  }
-
-  test("stale-pointer-only state (all version dirs gone) unwedges on append") {
-    val root = Files.createTempDirectory("graft-alog-wedge").toString + "/log"
-    AtomicRewrite.write(spark, root, Seq((1L, "old")).toDF("v", "x").coalesce(1))
-    val f = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // fold completed + every v= dir deleted, but the crash hit before
-    // the pointer delete
-    val staged = new org.apache.hadoop.fs.Path(root, ".stage")
-    AtomicRewrite.read(spark, root).coalesce(1)
-      .write.mode("overwrite").parquet(staged.toString)
-    f.listStatus(staged).filter(_.getPath.getName.endsWith(".parquet"))
-      .foreach(s => f.rename(s.getPath,
-        new org.apache.hadoop.fs.Path(root, "legacy.parquet")))
-    f.delete(staged, true)
-    f.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(_.getPath.getName.startsWith("v="))
-      .foreach(s => f.delete(s.getPath, true))
-    assert(AtomicRewrite.exists(spark, root), "pointer still present")
-
-    AppendLog.append(spark, root, Seq((2L, "new")).toDF("v", "x"))
-    assert(!AtomicRewrite.exists(spark, root))
-    val out = AppendLog.read(spark, root).select("x").as[String].collect().toSet
-    assert(out == Set("old", "new"), s"legacy rows must survive the wedge: $out")
   }
 }
